@@ -23,8 +23,8 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
   *    rate (one wall-second of traffic per tranche, event time advancing
   *    one second per tranche — the reference client's wall-clock µs
   *    stamping);
-  *  - the ingest streaming query runs the full hot path (3 broadcast dim
-  *    lookups → k-means scoring → 30-s session gate) and appends
+  *  - the ingest streaming query runs the full hot path (3 dim lookups
+  *    → k-means scoring → 30-s session gate) and appends
   *    session-openers to an export sink partitioned by event-time
   *    minute;
   *  - a second streaming query continuously maintains the per-second
@@ -47,6 +47,12 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
   * measured inside the same timed window.
   */
 object DemoBench {
+
+  /** A message made safe to embed raw inside a JSON string: quotes,
+    * backslashes and the whole U+0000–U+001F control range (tabs and
+    * other control characters appear in Spark exception messages)
+    * become spaces, so the artifact always parses. */
+  def jsonSafe(msg: String): String = msg.replaceAll("[\\u0000-\\u001f\"\\\\]", " ")
 
   /** cacheHitRate: fraction of the proc's TIMED-WINDOW calls served
     * from the driver result cache (−1 for @-procs, which bypass it).
@@ -549,8 +555,7 @@ object DemoBench {
         Thread.sleep(250)
       drainedOk = drained()
       ingestError = ingestQRef.get().exception
-        .map(e => Option(e.getMessage).getOrElse(e.toString)
-          .replaceAll("[\"\\\\\\n\\r]", " ").take(300))
+        .map(e => jsonSafe(Option(e.getMessage).getOrElse(e.toString)).take(300))
         .getOrElse("")
       // never interrupt a mid-flight batch at FINAL stop: an aborted
       // overwrite leaves its batch=<id> dir deleted with no restart
@@ -602,7 +607,7 @@ object DemoBench {
       .filter(s => s.atNanos >= windowStart && s.atNanos < windowEnd)
     def pctMs(lats: Array[Long], p: Double): Double =
       if (lats.isEmpty) 0.0
-      else lats(math.min(lats.length - 1, math.ceil(p * lats.length).toInt - 1)) / 1e6
+      else NearestRank(lats, p) / 1e6
     val allLat = windowSamples.map(_.latNanos).sorted
     val perProc = DashCalls.map(_._1).map { proc =>
       val l = windowSamples.filter(_.proc == proc).map(_.latNanos).sorted

@@ -53,11 +53,10 @@ object SimilarityOps3 {
       //
       // tf is binary over DISTINCT shingles, so BOTH endpoints of a
       // shared gram carry the same weight and every pair contribution
-      // is w(g)² — a per-GRAM constant. The former plan didn't use
-      // that: it joined per-occurrence weights into BOTH self-join
-      // legs and multiplied wa·wb per pair. Now w² attaches once per
-      // capped gram on ONE leg; the other leg is a bare (doc, g)
-      // projection and the pair sum is Σ w² with no per-pair multiply.
+      // is w(g)² — a per-GRAM constant, computed once per capped gram
+      // as the integer w2 column. The pair sum is Σ w² with no per-pair
+      // multiply; both self-join legs carry w2 only so that they share
+      // one exchange (see the least(w2, w2b) note below).
       // (An in-partition combination-generation variant — collect the
       // gram's doc array, explode the pair list — measured SLOWER than
       // the streaming self-join: materializing up to cap² structs per

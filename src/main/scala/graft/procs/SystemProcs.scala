@@ -83,12 +83,7 @@ object SystemProcs {
             val lat = Array.fill(100) {
               val t0 = System.nanoTime(); srv.call(p, a); System.nanoTime() - t0
             }.sorted
-            // nearest-rank percentile: ceil(p·n)−1. With n=100 that is
-            // index 98 — (0.99·n).toInt would index 99 = the MAX, making
-            // the p99 column a max column and the 1 Hz floor hostage to
-            // a single GC outlier
-            def pct(p: Double): Long =
-              lat(math.min(lat.length - 1, math.ceil(p * lat.length).toInt - 1)) / 1000
+            def pct(p: Double): Long = graft.NearestRank(lat, p) / 1000
             (p, lat.length.toLong, pct(0.50), pct(0.99), lat.last / 1000)
           }
         } finally srv.stop()

@@ -125,8 +125,7 @@ final class QueryServer(spark: SparkSession, dataDir: String, port: Int = 0) {
         dq.synchronized { dq.iterator().asScala.toArray }
       }.getOrElse(Array.empty[Long]).sorted
       def pct(p: Double): Long =
-        if (samples.isEmpty) 0L
-        else samples(math.min(samples.length - 1, (p * samples.length).toInt)) / 1000
+        if (samples.isEmpty) 0L else graft.NearestRank(samples, p) / 1000
       (proc, n.get(), pct(0.50), pct(0.95),
         if (samples.isEmpty) 0L else samples.last / 1000)
     }

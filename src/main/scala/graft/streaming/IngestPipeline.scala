@@ -1,14 +1,15 @@
 package graft.streaming
 
 import graft.ml.ModelSwap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's hot-path ingest (SURVEY.md §3.1, `NewEvent.java:50-79`)
   * re-expressed as a streaming pipeline:
   *
-  *  1. enrichment — string→id dimension resolution via broadcast joins
-  *     (J5; the reference does 3 unique-index point lookups per event);
+  *  1. enrichment — string→id dimension resolution as map lookups
+  *     against literal dim maps (J5; the reference does 3 unique-index
+  *     point lookups per event);
   *  2. scoring — nearest-centroid assignment against the current model
   *     (J3/M2), read per micro-batch from a [[graft.ml.ModelSwap]] so a
   *     retrain swap is atomic at batch granularity (ST8, LoadDsa
@@ -16,28 +17,39 @@ import org.apache.spark.sql.functions._
   *  3. dual sink — every event to the events sink; only session-opening
   *     events (30-s gap, [[SessionDedup]]) to the export sink (F6/ST7).
   *
-  * Scale: enrichment joins broadcast (dims are small by design, §1.1);
-  * scoring is a map-side expression against ≤20 broadcast centers; the
-  * only shuffle is the session-dedup keyed exchange.
+  * Scale: enrichment is a row-local lookup in a literal map (dims are
+  * small by design, §1.1: 50 dests, 75 agents); scoring is a map-side
+  * expression against ≤20 literal centers; the only shuffle is the
+  * session-dedup keyed exchange.
   */
 object IngestPipeline {
 
-  /** J5: resolve string keys to dimension ids with broadcast joins.
-    * `dests`/`agents` carry (id, key) columns. Left joins: unknown
-    * strings keep null ids, as the reference inserts -1/null. */
+  /** J5: resolve string keys to dimension ids. `dests`/`agents` carry
+    * (id: long, key: string) columns with unique keys — the reference's
+    * unique index; a repeated key fails the `require` (a join would have
+    * duplicated the event). Each dim is collected ONCE, when the query
+    * is defined, into a literal map, so a micro-batch runs no broadcast
+    * job and no join — the dims are frozen at that point, as the
+    * reference loads them once at startup (`LogGenerator.loadUrls`).
+    * Unknown strings keep null ids, as the reference inserts -1/null. */
   def enrich(events: DataFrame, dests: DataFrame, agents: DataFrame): DataFrame = {
-    val d = broadcast(dests.select(col("id").as("dest_id"), col("key").as("dest_key")))
-    val r = broadcast(dests.select(col("id").as("referral_id"), col("key").as("referral_key")))
-    val a = broadcast(agents.select(col("id").as("agent_id"), col("key").as("agent_key")))
+    val destIds = idMap(dests, "dests")
+    val agentIds = idMap(agents, "agents")
     events
-      .join(d, events("dest") === d("dest_key"), "left")
-      .join(r, events("referral") === r("referral_key"), "left")
-      .join(a, events("agent") === a("agent_key"), "left")
-      .drop("dest_key", "referral_key", "agent_key")
+      .withColumn("dest_id", try_element_at(destIds, col("dest")))
+      .withColumn("referral_id", try_element_at(destIds, col("referral")))
+      .withColumn("agent_id", try_element_at(agentIds, col("agent")))
+  }
+
+  private def idMap(dim: DataFrame, name: String): Column = {
+    val rows = dim.collect()
+    val keys = rows.map(_.getAs[String]("key"))
+    require(keys.distinct.length == keys.length, s"$name dim has duplicate keys")
+    map_from_arrays(lit(keys), lit(rows.map(_.getAs[Number]("id").longValue)))
   }
 
   /** The full reference hot path over a raw generated-event stream:
-    * 3 broadcast dim lookups (J5) → k-means scoring against the
+    * 3 dim lookups (J5) → k-means scoring against the
     * literal center set (J3/M2) → enriched-shape projection → 30-s
     * session gate (J4/ST4). ONE definition shared by every harness
     * that claims to measure "the reference hot path"

@@ -16,6 +16,14 @@ import org.apache.spark.sql.streaming._
   * SAME pure kernel the flatMapGroupsWithState form uses, so the two
   * operators cannot drift; SessionGateTwsSpec pins operator-level
   * parity on real event data.
+  *
+  * Measured non-win, so the hot path ([[IngestPipeline.hotPath]]) keeps
+  * the flatMapGroupsWithState gate: under RocksDB with changelog
+  * checkpointing, 8 state partitions on local[4] (4-vCPU Xeon VM), fed
+  * 80k-event micro-batches of 20k-events/s `EventGen` traffic, this
+  * operator's stateful stage took 3.3–4.1 s of task CPU per batch at
+  * 480k–560k live keys, against 2.2–2.7 s for [[SessionDedup.dedup]] on
+  * the same batches (two runs, both orders).
   */
 object SessionGateTws {
   import SessionDedup.{Ev, GapMicros, micros, sessionStarts}

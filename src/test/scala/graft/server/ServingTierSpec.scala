@@ -1,6 +1,7 @@
 package graft.server
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** The serving tier must stay materialized across refreshes (the
   * CacheManager plan-identity trap) and must never scan the fact
@@ -42,8 +43,21 @@ class ServingTierSpec extends SparkSpec {
              !plan.contains("BroadcastExchange"),
         s"windowed render must filter on the pinned as-of literal:\n$plan")
     }
-    // the pin must agree with what a fresh aggregate over the view says
-    val expected = tier.getTopUsers(Int.MaxValue / 2, 10).collect().map(_.toString)
-    assert(expected.nonEmpty, "sanity: the unbounded window sees data")
+    // the pin must agree with what a fresh aggregate says: recompute
+    // max(second_ts) over the events, then compare renders against the
+    // same windows computed from scratch. The 0-s window holds exactly
+    // the as-of second, so a stale or off-by-one pin changes its rows.
+    val perSec = graft.operators.ClickstreamOps.eventsBySecond(spark, sf)
+    val freshAsOf = perSec.agg(max(col("second_ts"))).collect()(0).getTimestamp(0)
+    for ((seconds, limit) <- Seq((0, 1000000), (60, 10))) {
+      val want = perSec
+        .filter(col("second_ts") >= lit(freshAsOf) - expr(s"INTERVAL $seconds seconds"))
+        .groupBy("user_id").agg(sum("count_values").as("counts"))
+        .orderBy(col("counts").desc, col("user_id")).limit(limit)
+        .collect().map(_.toString)
+      val got = tier.getTopUsers(seconds, limit).collect().map(_.toString)
+      assert(want.nonEmpty && got.sameElements(want),
+        s"${seconds}-s window from the pin ${got.toSeq} != fresh ${want.toSeq}")
+    }
   }
 }
