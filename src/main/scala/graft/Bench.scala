@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // read FIRST, before our own JVM spins up executors: loadavg_before
@@ -9,13 +8,7 @@ object Bench {
     val loadAtStart = BoxLoad.loadavg1m()
     val steal0 = BoxLoad.stealSnap()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession(defaultCpus = 4)
     // ERROR, not WARN: the driver machine-parses stdout's tail and the
     // judge reads the raw tail — executor WARN spam (e.g. WindowExec
     // notes on provably-bounded post-aggregate windows) must not crowd

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan for named queries —
   * `runMain graft.ExplainTool <sfDir> <query> [query ...]`. Used to
   * audit pushdown (PushedFilters/ReadSchema), join strategies and
@@ -10,11 +8,7 @@ object ExplainTool {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession(defaultCpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n########## $n ##########")

@@ -14,12 +14,6 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the per-key top-k heap operator and the
-    // rule that rewrites the SQL window-top-k idiom onto it — every
-    // session built with this extension plans
-    // `Filter(row_number <= k, Window)` as GroupedTopKExec for free
-    e.injectOptimizerRule(_ => graft.plans.GroupedTopK.GroupedTopKRewrite)
-    e.injectPlannerStrategy(_ => graft.plans.GroupedTopK.GroupedTopKStrategy)
     e.injectFunction((
       FunctionIdentifier("ip_to_int"),
       new ExpressionInfo(classOf[IpToInt].getName, "ip_to_int"),

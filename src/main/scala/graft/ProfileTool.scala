@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool: per-query overhead profile —
@@ -20,13 +19,7 @@ object ProfileTool {
     val names =
       if (args.length > 1 && args(1) != "ALL") args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession(defaultCpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,12 @@ object Verify {
     // optional: limit the dump to named queries (dev iteration); the
     // oracle json always contains every query so the driver is unaffected
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 so downstream readers (duckdb/pyarrow) see naive
-      // timestamps, matching the DuckDB oracle's naive TIMESTAMP values
-      // under the UTC session; TIMESTAMP_MICROS would surface as
-      // tz-aware UTC and fail naive-vs-aware equality in the compare.
-      .config("spark.sql.parquet.outputTimestampType", "INT96")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = ToolSession(defaultCpus = 4)
+    // INT96 so downstream readers (duckdb/pyarrow) see naive
+    // timestamps, matching the DuckDB oracle's naive TIMESTAMP values
+    // under the UTC session; TIMESTAMP_MICROS would surface as
+    // tz-aware UTC and fail naive-vs-aware equality in the compare.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

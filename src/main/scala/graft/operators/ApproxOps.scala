@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ConcurrentJobs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,14 +91,13 @@ object ApproxOps {
       // sequentially left the cluster idle half the construction
       // (guide §2.6); overlap them (batch-only path, nothing latency-
       // sensitive to starve)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      val skRowsF = Future(ev.repartition(col("day")).groupBy("day")
+      val skRowsF = ConcurrentJobs.async(s)(ev.repartition(col("day")).groupBy("day")
         .agg(expr("count_min_sketch(user_id, 0.0001d, 0.99d, 42)").as("sk"))
         .collect())
       val w = Window.partitionBy("day").orderBy(col("c").desc, col("user_id"))
-      val candsF = Future(ev.groupBy("day", "user_id").agg(count(lit(1)).as("c"))
+      val candsF = ConcurrentJobs.async(s)(ev.groupBy("day", "user_id").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 20)
         .select("user_id").distinct()
         .collect().map(_.getLong(0)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ConcurrentJobs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,25 +83,25 @@ object GovernanceOps {
     // the idle capacity). Materialize them concurrently; this is a
     // batch-only path, so unlike ServingTier.refresh (kept sequential
     // on purpose) there is no latency-sensitive micro-batch to starve.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val oF = Future(orders.agg(
+    val spark = orders.sparkSession
+    val oF = ConcurrentJobs.async(spark)(orders.agg(
       count(lit(1)).as("n"),
       countDistinct(col("o_orderkey")).as("nd"),
       sum(when(!(col("o_totalprice") > 0), 1L).otherwise(0L)).as("bad_price"))
       .localCheckpoint(true))
-    val cF = Future(customer.agg(
+    val cF = ConcurrentJobs.async(spark)(customer.agg(
       count(lit(1)).as("n"),
       sum(when(col("c_name").isNull, 1L).otherwise(0L)).as("null_name"))
       .localCheckpoint(true))
-    val lF = Future(lineitem.agg(
+    val lF = ConcurrentJobs.async(spark)(lineitem.agg(
       count(lit(1)).as("n"),
       countDistinct(col("l_orderkey"), col("l_linenumber")).as("nd"),
       sum(when(!col("l_quantity").between(1, 50), 1L).otherwise(0L)).as("bad_qty"))
       .localCheckpoint(true))
     // FK rule: orders whose customer is missing (broadcast anti join)
-    val fkF = Future(orders.select(col("o_custkey"))
+    val fkF = ConcurrentJobs.async(spark)(orders.select(col("o_custkey"))
       .join(broadcast(customer.select(col("c_custkey"))),
         col("o_custkey") === col("c_custkey"), "left_anti")
       .agg(count(lit(1)).as("viol")).localCheckpoint(true))

@@ -38,24 +38,25 @@ object RelationalOps5 {
           |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)
     }),
 
-    // per-key top-k through the CUSTOM PHYSICAL OPERATOR (bounded
-    // k-heaps behind one ClusteredDistribution exchange — see
-    // graft.plans.GroupedTopK) — same semantics as the LATERAL /
-    // window-rank forms, oracle-checked against the window SQL
+    // the same per-customer top-3 as the SQL window idiom — Spark plans
+    // `row_number() <= 3` as a partial WindowGroupLimit before the
+    // exchange and a final one after it, so each task ships at most 3
+    // rows per key and only the survivors are sorted and ranked
     "grouped_topk_orders" -> ((s, d) => {
-      val ord = Tables.orders(s, d)
-        .filter(col("o_custkey") <= 100)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-      graft.plans.GroupedTopK.topKPerKey(ord, Seq("o_custkey"),
-          Seq(("o_totalprice", true), ("o_orderkey", false)), 3)
-        .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
+      // only the one view: the full catalog registration costs ~0.4 s
+      Tables.orders(s, d).createOrReplaceTempView("orders")
+      s.sql(
+        """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+          |  SELECT o_custkey, o_orderkey, o_totalprice,
+          |         row_number() OVER (PARTITION BY o_custkey
+          |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
+          |  FROM orders WHERE o_custkey <= 100)
+          |WHERE rn <= 3
+          |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
     }),
 
-    // the SAME top-k written as the window idiom — since round 6 the
-    // GroupedTopKRewrite optimizer rule (injected via GraftExtensions)
-    // replans this Filter(rn<=3, Window(row_number)) as GroupedTopKExec
-    // automatically: SQL users get the heap operator with no API
-    // opt-in. PlanAuditSpec asserts the rewritten plan shape.
+    // the same top-k written in the DataFrame API; PlanAuditSpec pins
+    // the partial WindowGroupLimit below the exchange
     "window_topk_orders" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey")
@@ -68,10 +69,7 @@ object RelationalOps5 {
         .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
     }),
 
-    // the Sort+Window physical form, kept benchable for the standing
-    // A/B against the heap operator: RETAINING the rank column in the
-    // output is exactly the case the rewrite must not (and does not)
-    // touch — rank values are used, so the sort is genuinely needed
+    // the same top-k with the rank kept in the output (widened to long)
     "window_topk_ranked" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey")
@@ -81,7 +79,6 @@ object RelationalOps5 {
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
-        // keep (and widen) the rank: referenced output ⇒ no rewrite
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
           col("rn").cast("long").as("rn"))
         .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.plans.GroupedTopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Second selection tranche.
@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions._
   *    expectation; evaluation sets and human-review queues need
   *    exactly k per stratum, reproducibly. Membership is a pure
   *    content function (md5 order), so any reshard/rerun returns the
-  *    identical sample — and the per-group top-k runs on the custom
-  *    `GroupedTopK` physical operator (bounded k-heaps per key, one
-  *    Exchange, no per-group sort), the operator's first first-class
-  *    curation duty beyond its A/B bench query.
+  *    identical sample. The per-stratum cut is the `row_number() <= k`
+  *    window idiom, which Spark plans as a WindowGroupLimit.
   *  - `interleave_order` — deterministic round-robin curriculum: docs
   *    ordered by content hash WITHIN each source, then sources
   *    interleaved one-doc-at-a-time (pos = rank·S + source_idx). The
@@ -25,9 +23,10 @@ import org.apache.spark.sql.functions._
   *    run — the standard interleaving the packing stage feeds from.
   *
   * Scale notes (100 TB):
-  *  - sample_exact_k: one hash Exchange on `lang`, per-partition
-  *    k-heaps (O(n log k), k-row state per stratum) — never a
-  *    per-group sort; output is |langs|·k rows.
+  *  - sample_exact_k: a partial WindowGroupLimit keeps ≤ k rows per
+  *    stratum in each task before the one hash Exchange on `lang`, so
+  *    only |tasks|·|langs|·k rows shuffle and get sorted and ranked;
+  *    output is |langs|·k rows.
   *  - interleave_order: the only wide op is a per-source window rank
   *    (hash-partitioned by source — NOT a global window); position
   *    arithmetic is a map stage. Output carries every doc, but each
@@ -41,8 +40,9 @@ object SelectionOps2 {
   /** k lexicographically-smallest md5(text) docs per language. */
   def exactKPerLang(docs: DataFrame, k: Int): DataFrame = {
     val pr = docs.select(col("doc_id"), col("lang"), md5(col("text")).as("pr"))
-    GroupedTopK.topKPerKey(pr, Seq("lang"),
-        Seq(("pr", false), ("doc_id", false)), k)
+    pr.withColumn("rn", row_number().over(
+        Window.partitionBy("lang").orderBy(col("pr"), col("doc_id"))))
+      .filter(col("rn") <= k)
       .select(col("lang"), col("doc_id"), col("pr"))
       .orderBy("lang", "pr", "doc_id")
   }
@@ -53,7 +53,6 @@ object SelectionOps2 {
     * per source and no two consecutive positions within a source are
     * adjacent globally (S ≥ 2). */
   def interleaveOrder(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = docs
       .select(col("doc_id"), col("source"), md5(col("text")).as("pr"))
       .withColumn("rnk", row_number().over(

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.plans.GroupedTopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-9 curation tranche: the dataset-assembly second pass — the
@@ -35,14 +35,14 @@ import org.apache.spark.sql.functions._
   * final long/long division, identical bits in both engines).
   *
   * Scale notes (100 TB):
-  *  - domain_cap_sample rides the custom [[GroupedTopK]] physical
-  *    operator — per-partition bounded k-heaps per domain, ONE shuffle
-  *    on the domain key, no per-group sort, no Window. A skewed mega
-  *    domain costs its heap (k rows), not its row count, on the
-  *    reduce side.
+  *  - domain_cap_sample is the `row_number() <= k` window idiom,
+  *    which Spark plans as a partial WindowGroupLimit (≤ k rows per
+  *    domain per task) before ONE shuffle on the domain key and a final
+  *    WindowGroupLimit + Window after it. A skewed mega domain ships k
+  *    rows per task, not its row count, to the reduce side.
   *  - quality_gate_funnel is two jobs over the corpus: one
-  *    conditional-sum pass (map-side partials, 1-row result) and one
-  *    GroupedTopK count for the cap stage. Nothing corpus-sized
+  *    conditional-sum pass (map-side partials, 1-row result) and the
+  *    same capped window count for the cap stage. Nothing corpus-sized
   *    shuffles; gates are row-local predicates.
   *  - gram_coverage_curve never materializes a global vocabulary
   *    order: TakeOrderedAndProject keeps the top-5000 gram types
@@ -76,12 +76,15 @@ object TrainingOps8 {
   private val lenOkSql = "n_chars BETWEEN 120 AND 500"
 
   /** Deterministic per-domain cap: k smallest hash priorities win. */
-  def domainCapSample(docs: DataFrame, k: Int): DataFrame = {
-    val pr = docs.select(col("doc_id"), col("source"), priorityCol.as("pr"))
-    GroupedTopK.topKPerKey(pr, Seq("source"),
-        Seq(("pr", false), ("doc_id", false)), k)
+  def domainCapSample(docs: DataFrame, k: Int): DataFrame =
+    capPerSource(docs.select(col("doc_id"), col("source"), priorityCol.as("pr")), k)
+
+  /** The k rows of smallest (pr, doc_id) per source. */
+  private def capPerSource(pr: DataFrame, k: Int): DataFrame =
+    pr.withColumn("rn", row_number().over(
+        Window.partitionBy("source").orderBy(col("pr"), col("doc_id"))))
+      .filter(col("rn") <= k)
       .select(col("doc_id"), col("source"), col("pr"))
-  }
 
   /** Per-cluster best-member resolution over the exact near-dup graph. */
   def keepBest(docs: DataFrame): DataFrame = {
@@ -113,9 +116,8 @@ object TrainingOps8 {
         sum(when(col("s1"), 1L).otherwise(0L)).as("c1"),
         sum(when(col("s2"), 1L).otherwise(0L)).as("c2"),
         sum(when(col("s3"), 1L).otherwise(0L)).as("c3"))
-      val capped = GroupedTopK.topKPerKey(
-          f.filter(col("s3")).select(col("doc_id"), col("source"), col("pr")),
-          Seq("source"), Seq(("pr", false), ("doc_id", false)), DomainCap)
+      val capped = capPerSource(
+          f.filter(col("s3")).select(col("doc_id"), col("source"), col("pr")), DomainCap)
         .agg(count(lit(1)).as("c4"))
       head.crossJoin(broadcast(capped))
         .select(explode(array(
@@ -133,7 +135,6 @@ object TrainingOps8 {
     // head-of-distribution coverage: top-k trigram types' share of all
     // trigram tokens, k ∈ {100, 1000, 5000}
     "gram_coverage_curve" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       import s.implicits._
       val grams = Tables.documents(s, d)
         .select(split(col("text"), " ", -1).as("w"))

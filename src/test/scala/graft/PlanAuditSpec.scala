@@ -41,30 +41,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(!scan.contains("PushedFilters: []"), s"q6 pushed-filter list is empty:\n$scan")
   }
 
-  test("window-top-k idiom auto-rewrites onto the heap operator; ranked form does not") {
-    // GroupedTopKRewrite (GraftExtensions): rank filtered AND dropped →
-    // GroupedTopKExec, no Window, no per-group sort
-    val rewritten = finalPlan("window_topk_orders")
-    assert(rewritten.contains("GroupedTopK"),
-      s"window_topk_orders did not rewrite onto GroupedTopKExec:\n$rewritten")
-    assert(!rewritten.contains("Window"),
-      s"window_topk_orders kept its Window after the rewrite:\n$rewritten")
-    // rank RETAINED in output → rewrite must leave the window form alone
-    val ranked = finalPlan("window_topk_ranked")
-    assert(ranked.contains("Window") && !ranked.contains("GroupedTopK"),
-      s"window_topk_ranked must keep the Sort+Window form (rank is used):\n$ranked")
-  }
-
-  test("grouped-top-k rewrite honors its conf kill switch") {
-    val key = plans.GroupedTopK.GroupedTopKRewrite.EnabledKey
-    spark.conf.set(key, "false")
-    try {
-      val plan = finalPlan("window_topk_orders")
-      assert(plan.contains("Window") && !plan.contains("GroupedTopK"),
-        s"rewrite fired despite $key=false:\n$plan")
-    } finally spark.conf.unset(key)
-    val back = finalPlan("window_topk_orders")
-    assert(back.contains("GroupedTopK"), "rewrite must re-enable after unset")
+  test("per-key top-k rows cut each group to k before the shuffle (partial WindowGroupLimit)") {
+    // SQL and DataFrame forms of `row_number() <= 3`, with the rank
+    // dropped or kept: each task ships at most 3 rows per customer
+    for (q <- Seq("grouped_topk_orders", "window_topk_orders", "window_topk_ranked")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(TopKPlan.limitsBeforeShuffle(df),
+        s"$q shuffles whole groups (no partial WindowGroupLimit below the exchange):\n" +
+          df.queryExecution.executedPlan)
+    }
   }
 
   test("ANN probes partition-prune the at-rest index (no full signature/list scan)") {

@@ -25,11 +25,10 @@ class SelectionOps2Spec extends SparkSpec {
       "sample must be partitioning-independent")
   }
 
-  test("sample_exact_k plans the GroupedTopK operator, no per-group sort-rank") {
-    val p = SelectionOps2.exactKPerLang(Tables.documents(spark, sf), 3)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("GroupedTopK"), s"custom operator missing from plan:\n$p")
-    assert(!p.contains("Window"), s"window rank should be absent:\n$p")
+  test("sample_exact_k cuts each stratum to k before the shuffle (partial WindowGroupLimit)") {
+    val df = SelectionOps2.exactKPerLang(Tables.documents(spark, sf), 3)
+    assert(graft.TopKPlan.limitsBeforeShuffle(df),
+      s"whole strata shuffle:\n${df.queryExecution.executedPlan}")
   }
 
   test("interleave_order: positions are a permutation and sources alternate") {

@@ -27,10 +27,12 @@ class TrainingOps8Spec extends SparkSpec {
       "survivor set must be partitioning-independent")
   }
 
-  test("domain_cap_sample plans GroupedTopK, not a window rank") {
-    val p = q("domain_cap_sample").queryExecution.executedPlan.toString
-    assert(p.contains("GroupedTopK"), s"custom operator missing:\n$p")
-    assert(!p.contains("Window"), s"window rank should be absent:\n$p")
+  test("domain_cap_sample and the funnel's cap stage cut each source to k before the shuffle") {
+    for (name <- Seq("domain_cap_sample", "quality_gate_funnel")) {
+      val df = q(name)
+      assert(graft.TopKPlan.limitsBeforeShuffle(df),
+        s"$name shuffles whole sources (no partial WindowGroupLimit):\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("quality_gate_funnel: five monotone stages anchored at the corpus size") {

@@ -4,18 +4,18 @@ import graft.{SparkSpec, Tables}
 import graft.ml.{MLOps, ModelSwap}
 import org.apache.spark.sql.functions._
 
-/** Hot-path ingest pieces: enrichment joins (J5), model-swap scoring
+/** Hot-path ingest pieces: dim enrichment (J5), model-swap scoring
   * (J3/ST8), retention (ST6). */
 class IngestPipelineSpec extends SparkSpec {
 
-  test("enrich resolves string keys to dim ids via broadcast joins, unknowns null") {
+  test("enrich resolves string keys to dim ids via literal dim maps, unknowns null") {
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("event_type").as("dest"),
         col("event_type").as("referral"),
         concat(lit("agent-"), col("event_type")).as("agent"))
     val dests = ev.select(col("dest").as("key")).distinct()
       .orderBy("key").withColumn("id", monotonically_increasing_id())
-    // agents dim misses one key on purpose → left join must keep nulls
+    // agents dim misses one key on purpose → that key's id stays null
     val agents = ev.select(col("agent").as("key")).distinct()
       .filter(col("key") =!= "agent-error")
       .orderBy("key").withColumn("id", monotonically_increasing_id())
