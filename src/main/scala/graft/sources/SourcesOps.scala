@@ -330,20 +330,6 @@ object SourcesOps {
     CompactReport(healed, rewritten)
   }
 
-  /** Read a partitioned directory WITHOUT the compaction-swap races:
-    * a plain `spark.read.parquet` that lists the root while a partition
-    * is between [[compactPartitionsReport]]'s two renames silently
-    * misses that partition — an under-retrieval with no error. The
-    * partition SET is invariant through a swap (every instant, each
-    * partition's rows live in exactly one of its live dir or its trash
-    * dir), so this read verifies its listing against
-    * `live-dirs ∪ trash-suffixes` and relists until no verified
-    * partition is missing (bounded wait — a mid-swap gap is two rename
-    * syscalls). A partition missing from the listing whose live dir is
-    * EMPTY and has no trash is genuinely empty, not racing. If the
-    * inconsistency persists past the budget (a crashed compactor's
-    * leftover trash — repair is the next maintenance pass's job, a
-    * reader never mutates the store), the current listing is served. */
   /** File-not-found anywhere in a cause chain — the LOUD shape a
     * compaction swap gives an in-flight read (a footer or data file
     * renamed away mid-read). Message grep included for error-class
@@ -362,12 +348,30 @@ object SourcesOps {
         m.contains("Invalid directory or I/O error occurred")) ||
       isFnf(t.getCause))
 
+  /** Read a partitioned directory WITHOUT the compaction-swap races:
+    * a plain `spark.read.parquet` that lists the root while a partition
+    * is between [[compactPartitionsReport]]'s two renames silently
+    * misses that partition — an under-retrieval with no error. The
+    * partition SET is invariant through a swap (every instant, each
+    * partition's rows live in exactly one of its live dir or its trash
+    * dir), so this read verifies its listing against
+    * `live-dirs ∪ trash-suffixes` and relists until no verified
+    * partition is missing (bounded wait — a mid-swap gap is two rename
+    * syscalls). A partition missing from the listing whose live dir is
+    * EMPTY and has no trash is genuinely empty, not racing. If the
+    * inconsistency persists past the budget (a crashed compactor's
+    * leftover trash — repair is the next maintenance pass's job, a
+    * reader never mutates the store), the read fails with a
+    * FileNotFoundException naming the racing partitions — the loud,
+    * retryable shape [[isFnf]] recognises — rather than serve a listing
+    * it knows is short. */
   def readConsistent(spark: SparkSession, dir: String,
                      maxWaitMs: Long = 2000): DataFrame = {
     val root = Dfs.path(dir)
     val qualRoot = Dfs.qualify(dir)
     val deadline = System.nanoTime() + maxWaitMs * 1000000L
     var df: DataFrame = null
+    var racing = Set.empty[String]
     var done = false
     while (!done) try {
       val listing = Dfs.list(root)
@@ -378,7 +382,9 @@ object SourcesOps {
         s.getPath.getName.startsWith(".compact_trash_"))
         .map(_.getPath.getName.stripPrefix(".compact_trash_")).toSet
       df = spark.read.parquet(dir)
-      val seen = df.inputFiles.iterator.flatMap { f =>
+      // qualified like the root: inputFiles spells a local file
+      // `file:///…` where the root qualifies to `file:/…`
+      val seen = df.inputFiles.iterator.map(Dfs.qualify).flatMap { f =>
         if (f.startsWith(qualRoot + "/")) {
           val rel = f.substring(qualRoot.length + 1)
           val cut = rel.indexOf('/')
@@ -393,7 +399,7 @@ object SourcesOps {
       // silent short-count this read exists to close. Freshly checking
       // trash catches mid-gap; freshly listing live catches both
       // pre-rename1 and post-rename2 states.
-      val racing = ((liveParts ++ trashParts) -- seen).filter { name =>
+      racing = ((liveParts ++ trashParts) -- seen).filter { name =>
         Dfs.exists(new org.apache.hadoop.fs.Path(root, s".compact_trash_$name")) ||
           Dfs.list(new org.apache.hadoop.fs.Path(root, name))
             .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -406,6 +412,11 @@ object SourcesOps {
       case t: Throwable if isFnf(t) && System.nanoTime() <= deadline =>
         Thread.sleep(10)
     }
+    if (racing.nonEmpty)
+      throw new java.io.FileNotFoundException(
+        s"$dir: partitions ${racing.toSeq.sorted.mkString(", ")} still missing from " +
+          s"the listing after $maxWaitMs ms (compaction swap in flight, or a " +
+          "crashed swap's trash awaiting the next compactPartitions)")
     df
   }
 

@@ -51,11 +51,9 @@ object IngestPipeline {
   /** The full reference hot path over a raw generated-event stream:
     * 3 dim lookups (J5) → k-means scoring against the
     * literal center set (J3/M2) → enriched-shape projection → 30-s
-    * session gate (J4/ST4). ONE definition shared by every harness
-    * that claims to measure "the reference hot path"
-    * (ThroughputBench's steady-state legs and DemoBench's integrated
-    * run) — two hand-maintained copies measured the same claim while
-    * being free to drift apart. */
+    * session gate (J4/ST4). ONE definition, run by the live topology
+    * ([[LivePipeline]]) and by the benchmark's live harness, so no
+    * measurement of "the reference hot path" runs a private copy. */
   def hotPath(stream: DataFrame)(implicit spark: SparkSession)
       : org.apache.spark.sql.Dataset[SessionDedup.RichEv] = {
     import spark.implicits._

@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.LiveConfig
+
 /** Pins the integrated demo-parity contract (reference `run.sh:144-159`
   * + `web/js/demo.js:2-45` — the five procedures and the @Statistics
   * poll — wired to 1-s intervals by `web/js/voltdb-dashboard.js:52-75`):
@@ -14,17 +16,16 @@ package graft
 class DemoParitySpec extends SparkSpec {
 
   test("integrated demo: >=20k events/s sustained AND dashboard p99 < 1 s, simultaneously") {
-    // streamParts=2 on the 4-core suite session: the shared test
+    // stateParts=2 on the 4-core suite session: the shared test
     // context is FIFO (no FAIR pool file), so micro-batch stages that
     // fill every core would queue each cold dashboard render behind a
     // whole batch — leaving 2 cores free is the 4-core analogue of the
     // FAIR slot-sharing the 32-core main configures. Second-granular
     // retention buckets let the tick actually drop partitions inside a
     // 60-s window (minute buckets need 90+ s of event time).
-    val res = DemoBench.run(spark, sf,
-      durationSec = 45, offeredEps = 25000, warmSec = 15,
-      refreshEverySec = 15, retentionEverySec = 10, keepSeconds = 30,
-      streamParts = "2", bucketPattern = "yyyy-MM-dd-HH-mm-ss")
+    val live = LiveConfig(sf, ckpt("graft_demo"), stateParts = 2,
+      bucketPattern = LiveConfig.SecondBuckets, retentionEverySec = 10, keepSeconds = 30)
+    val res = DemoBench.run(spark, live, durationSec = 45, offeredEps = 25000, warmSec = 15)
     info(res.json)
     // the two contract floors, measured inside the same timed window.
     // Hard floors (the committed-artifact levels: >=20k eps, p99 < 1 s)

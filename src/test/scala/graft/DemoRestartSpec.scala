@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.LiveConfig
+
 /** Integrated crash-restart: StreamRestartSpec restarts each stateful
   * family in isolation; this kills the ingest hot path MID-DEMO — a
   * hard stop that interrupts the in-flight micro-batch before its
@@ -20,14 +22,13 @@ package graft
 class DemoRestartSpec extends SparkSpec {
 
   test("hard kill + checkpoint restart mid-demo: exactly-once export, dashboard alive, bounded recovery") {
-    val res = DemoBench.run(spark, sf,
-      durationSec = 60, offeredEps = 25000, warmSec = 15,
-      refreshEverySec = 15, retentionEverySec = 10,
+    val live = LiveConfig(sf, ckpt("graft_demo"), stateParts = 2,
+      bucketPattern = LiveConfig.SecondBuckets, retentionEverySec = 10,
       // retention keeps TICKING (mechanics under load) but its horizon
       // never passes: the exactly-once count compares the sink against
       // a replay of ALL landed events, so nothing may be TTL-dropped
-      keepSeconds = 1000000,
-      streamParts = "2", bucketPattern = "yyyy-MM-dd-HH-mm-ss",
+      keepSeconds = 1000000)
+    val res = DemoBench.run(spark, live, durationSec = 60, offeredEps = 25000, warmSec = 15,
       killIngestAtSec = Some(20), verifyExactness = true)
     info(res.json)
     // teardown sanity FIRST: a dead restarted instance or a truncated
